@@ -30,8 +30,8 @@ class QuerySpec:
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, or None → rows-only check
     doc: str = ""
-    module: str = ""  # defining module of the raw builder fn (regrade map)
-    raw: Callable | None = None  # unwrapped builder (regrade source scan)
+    module: str = ""  # defining module of the raw builder fn
+    raw: Callable | None = None  # unwrapped builder (for source inspection)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -1237,227 +1237,6 @@ _STREAMING_MM += [
 
 for _name, _fn, _sql, _doc in _STREAMING_MM:
     register(_name, _sql, _doc)(_fn)
-
-
-#: The queries that execute Structured Streaming micro-batches — the
-#: CANONICAL streaming marker (ADVICE r10): bench.py's batch/stream
-#: wall split reads THIS set, not the name prefix, and
-#: tests/test_bench_contract.py pins membership == the `stream_`
-#: prefix convention, so a future streaming query that forgets either
-#: side fails loudly instead of silently skewing the floor-free batch
-#: total the perf gate reads.
-STREAMING_QUERIES = frozenset(
-    n for n in REGISTRY if n.startswith("stream_")
-)
-
-
-# ---------------------------------------------------------------------------
-# Driver grading window: the correctness harness grades the FIRST 50
-# registry entries per round (CORRECTNESS_r01.json == registration
-# order truncated at 50). The window is SELF-ROTATING: at import we
-# read the accumulated CORRECTNESS_r*.json verdicts and move every
-# query that has never been graded (or is still red) to the front, in
-# registration order — so newly-registered queries automatically enter
-# the next round's window with no manual list edit. Remaining slots are
-# back-filled with `_RECONFIRM` (high-value re-confirmations: the §2
-# reference surface and fixes from prior rounds, re-proven against each
-# round's regenerated testdata). tests/test_rotation.py goes red if
-# this ever leaves a registered query outside every window.
-# ---------------------------------------------------------------------------
-
-_WINDOW = 50
-
-# Hand-padding picks, in priority order, applied AFTER never-graded/
-# red and REGRADE.json but BEFORE the oldest-grade-first tail (r11).
-# Keep this list SMALL: the age-ordered tail now rotates every green
-# query back through the window automatically (VERDICT r10 #4), so
-# only two classes earn a permanent slot here — (a) queries whose
-# inputs are dtype-drift-sensitive against each round's REGENERATED
-# testdata (the events readers), and (b) one §2-surface + one
-# shared-index + one stateful-streaming representative as each
-# round's canary for their whole infra family. Infra-file changes
-# (caches/session/tmpdirs/sources) may TEMPORARILY pad more entries
-# here — see tools/rotation_check.py's warning.
-_RECONFIRM = [
-    # r12 trim (VERDICT r11 #2 window math): the burn-the-staleness
-    # round keeps only class (a) — the events readers whose inputs are
-    # dtype-drift-sensitive against regenerated testdata — plus ONE §2
-    # flagship; the other four r11 picks (src_join_projection,
-    # loan_monthly_schedule, ann_ivfpq_topk, stream_user_stats) were
-    # all graded green in r11 on current testdata, so their slots go
-    # to the r1–r2 age tail this round. Restore them as infra changes
-    # warrant (rotation_check warns on caches/session/tmpdirs/sources
-    # diffs).
-    "sessionize_events",
-    "events_tumbling_5min",
-    "stream_tumbling_5min",
-    "loan_final",
-    # r14 TEMPORARY infra padding (rotation_check warned:
-    # sources/registry.py + session.py changed — balanced()'s split
-    # estimate now reads session conf and probes directories, and the
-    # session builder reordered env-conf application): one §2-surface
-    # rep and one classic balanced()-consumer text rep re-prove the
-    # blast radius on driver hardware. Drop these two after the r14
-    # grade lands green.
-    "src_join_projection",
-    "top_words",
-]
-
-
-def classify_verdict(name: str, row: dict) -> str:
-    """Classify one CORRECTNESS row: 'green' (hash-green, or rows-only
-    where that is the strongest possible grade), 'rows_only' (the
-    green-by-design subset, for reporting), or 'red'.
-
-    Single source of truth for the green rule — `_graded_verdicts`
-    below and tools/rotation_check.py both consume it so the two can't
-    drift (r4 ADVICE).
-
-    Rows-only detail: a `no_oracle` row with a recorded row count is
-    green ONLY if the CURRENT spec still ships no oracle — the driver
-    ran the query and recorded its row count, the strongest grade such
-    an entry can ever earn. If the spec has since gained an oracle, the
-    old row does NOT count, keeping the query in the window until the
-    oracle is hash-graded.
-    """
-    if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-        spec = REGISTRY.get(name)
-        if spec is not None and spec.oracle is None:
-            return "rows_only"
-        return "red"
-    if row.get("err"):
-        return "red"
-    if row.get("hash_match") or (
-        row.get("hash_match") is None and row.get("rows_match")
-    ):
-        return "green"
-    return "red"
-
-
-def _repo_root() -> str:
-    import os as _os
-
-    return _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-
-
-def _graded_verdicts() -> tuple[set[str], set[str]]:
-    """(green-somewhere, graded-at-all) across all CORRECTNESS files."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    green: set[str] = set()
-    graded: set[str] = set()
-    for path in sorted(
-        _glob.glob(_os.path.join(_repo_root(), "CORRECTNESS_r*.json"))
-    ):
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, r in rows.items():
-            graded.add(name)
-            if classify_verdict(name, r) in ("green", "rows_only"):
-                green.add(name)
-    return green, graded
-
-
-def _latest_grade_rounds() -> dict[str, int]:
-    """name → the NEWEST round in which the driver graded it (from the
-    CORRECTNESS_r{N}.json filenames). 0 = never graded. Feeds the
-    oldest-grade-first back-fill in `grading_window` and the max-age
-    report in tools/rotation_check.py."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    latest: dict[str, int] = {}
-    for path in sorted(
-        _glob.glob(_os.path.join(_repo_root(), "CORRECTNESS_r*.json"))
-    ):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name in rows:
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _changed_path_regrades() -> list[str]:
-    """Queries flagged for regrade by `tools/rotation_check.py
-    --emit-regrade` (git diff since last grading → operator modules →
-    registered queries), committed as REGRADE.json. Replaces the r4
-    hand-picked changed-path list — a missed changed-path query would
-    otherwise keep a stale green for up to 3 rounds."""
-    import json as _json
-    import os as _os
-
-    path = _os.path.join(_repo_root(), "REGRADE.json")
-    try:
-        with open(path) as f:
-            data = _json.load(f)
-    except (OSError, ValueError):
-        return []
-    return [n for n in data.get("queries", []) if n in REGISTRY]
-
-
-def grading_window() -> list[str]:
-    """The front-`_WINDOW` ordering: never-graded + still-red first
-    (registration order), then changed-code regrades (REGRADE.json,
-    emitted by tools/rotation_check.py), then `_RECONFIRM` picks, then
-    an OLDEST-DRIVER-GRADE-FIRST tail (r11 — VERDICT r10 #4: the
-    static list alone left 49 greens stuck at their r1–r2 grades;
-    age-ordering bounds every query's driver-grade staleness at
-    ~⌈registry/window⌉ + regrade-pressure rounds and converges a few
-    rounds after introduction)."""
-    green, graded = _graded_verdicts()
-    names = list(REGISTRY)
-    front = [n for n in names if n not in green]  # never graded or red
-    for n in _changed_path_regrades():
-        if len(front) >= _WINDOW:
-            break
-        if n not in front:
-            front.append(n)
-    for n in _RECONFIRM:
-        if len(front) >= _WINDOW:
-            break
-        if n in REGISTRY and n not in front:
-            front.append(n)
-    ages = _latest_grade_rounds()
-    order = {n: i for i, n in enumerate(names)}
-    for n in sorted(
-        (n for n in names if n not in front),
-        key=lambda n: (ages.get(n, 0), order[n]),
-    ):
-        if len(front) >= _WINDOW:
-            break
-        # rows-only-by-design specs (oracle=None) never earn more than
-        # the rows_only grade they already hold — re-rotating one burns
-        # a hash-graded slot and drags the driver's n_correct below the
-        # window size every time (VERDICT r13 #3). They still enter via
-        # the non-green front until graded once.
-        if REGISTRY[n].oracle is None:
-            continue
-        front.append(n)
-    return front
-
-
-def _reorder_registry(front: list[str]) -> None:
-    global REGISTRY
-    ordered = {n: REGISTRY[n] for n in front if n in REGISTRY}
-    for _n, _s in REGISTRY.items():
-        if _n not in ordered:
-            ordered[_n] = _s
-    REGISTRY = ordered
-
-
-_reorder_registry(grading_window())
 
 
 # ---------------------------------------------------------------------------

@@ -3,10 +3,10 @@
 A few operators legitimately `persist()` an index they probe multiple
 times within one query (LSH bucket table, IVF quantized index, the CC
 fixpoint generation). Before this module each builder call leaked its
-cache into the session forever: bench.py runs every query twice and a
-driver/verify session runs them again, so `getPersistentRDDs` grew
-without bound across a 121-query session (VERDICT r2 "What's wrong"
-#3).
+cache into the session forever: a long-lived session (perfbench's
+warm-up and timed passes, `tools/verify_local.py` over the whole
+registry) runs the same builders again and again, so
+`getPersistentRDDs` grew without bound across a 121-query session.
 
 `claim(key, df)` persists `df` and unpersists the PREVIOUS DataFrame
 claimed under the same key — at most ONE live cached generation per
@@ -94,10 +94,11 @@ def shared_index(key: str, build) -> DataFrame:
     model for deterministic index structures (IVF cell assignment, PQ
     codes, PQ query LUTs, LSH bucket tables): the index is built ONCE
     and every query probes it. `release_all()` deliberately SKIPS this
-    tier — bench's per-query isolation must not charge every ANN query
-    a fresh index build no deployment would pay; `release_shared_all()`
-    drops it (teardown). Keys MUST embed sf_dir (a session that
-    verifies sf0.01 then sf0.1 would otherwise probe the wrong index).
+    tier — the per-op isolation of perfbench and `tools/verify_local.py`
+    must not charge every ANN query a fresh index build no deployment
+    would pay; `release_shared_all()` drops it (teardown). Keys MUST
+    embed sf_dir (a session that verifies sf0.01 then sf0.1 would
+    otherwise probe the wrong index).
 
     `build` is a zero-arg callable so a memo hit skips even the plan
     CONSTRUCTION — the unrolled distance expressions cost real py4j

@@ -24,8 +24,16 @@ def get_spark(
     driver_memory: str = "16g",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a SparkSession with the engine's defaults.
+
+    `cpus` falls back to `$SPARK_GRAFT_CPUS`, then to the number of
+    cores this process may run on.
+    """
+    cpus = (
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or len(os.sched_getaffinity(0))
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -3,10 +3,10 @@
 Several operators materialize intermediate state to disk-backed temp
 dirs (memory-sink→parquet swaps, SCD1 generation roots, bucketed-table
 layouts, sentinel-augmented stream inputs). Before this module each
-call leaked its `tempfile.mkdtemp` forever: bench.py runs every query
-twice and verify runs them again, so a full session traded the
-bounded-heap fix for unbounded /tmp growth holding full result copies
-(ADVICE r2).
+call leaked its `tempfile.mkdtemp` forever: perfbench repeats each
+op over warm-up and timed passes and `tools/verify_local.py` runs the
+whole registry in one session, so a full session traded the
+bounded-heap fix for unbounded /tmp growth holding full result copies.
 
 `claim(key, prefix)` returns a fresh dir and deletes the PREVIOUS dir
 claimed under the same key — at most ONE live generation per logical
@@ -16,7 +16,7 @@ are removed at interpreter exit.
 Contract: a DataFrame returned by builder run N reads files under run
 N's dir; calling the same builder again (run N+1) retires run N's dir,
 so consume (collect/write) each returned DataFrame before re-invoking
-its builder. Every harness (bench, verify, driver, pytest) already
+its builder. Every harness (perfbench, verify, driver, pytest) already
 works this way.
 """
 

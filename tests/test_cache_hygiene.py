@@ -169,9 +169,10 @@ def test_pagerank_driver_and_distributed_paths_agree(spark):
 
 
 def test_release_all_empties_tracked_caches(spark):
-    """bench.py isolates queries with release_all(); it must leave no
-    tracked generation behind (each live entry is a plan tree the
-    CacheManager compares against every later query's analysis)."""
+    """perfbench and verify_local isolate ops with release_all(); it
+    must leave no tracked generation behind (each live entry is a plan
+    tree the CacheManager compares against every later query's
+    analysis)."""
     dedup.neardup_pagerank(spark, SF_SMALL).count()
     similarity.ann_ivf_topk(spark, SF_SMALL).count()
     assert caches.live_count() > 0

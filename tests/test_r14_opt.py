@@ -9,8 +9,6 @@ import json
 
 import pytest
 
-from etl_portfolio_project_spark import api
-
 
 def test_conf_json_malformed_raises_named_error(monkeypatch):
     """ADVICE r13: malformed SPARK_GRAFT_CONF_JSON must fail with an
@@ -134,20 +132,3 @@ def test_stream_epoch_joins_broadcast_the_batch_side(spark, plan_fn):
     assert "ShuffledHashJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 4, plan
 
-
-def test_rows_only_specs_do_not_burn_age_tail_slots():
-    """VERDICT r13 #3: a rows-only-by-design spec (oracle=None) that
-    already holds its rows_only grade must not re-enter the grading
-    window via the age tail — it can never hash-match and drags the
-    driver's n_correct below the window size. It may only appear while
-    non-green (never graded / red)."""
-    green, _ = api._graded_verdicts()
-    window = api.grading_window()[: api._WINDOW]
-    offenders = [
-        n
-        for n in window
-        if api.REGISTRY[n].oracle is None and n in green
-    ]
-    assert offenders == [], (
-        f"green rows-only specs burning graded slots: {offenders}"
-    )

@@ -52,7 +52,7 @@ def main() -> int:
         # a typo must not produce a vacuous "0 mismatches" pass
         print(f"unknown queries {sorted(unknown)} or bad sf_dir {sf_dir}")
         return 2
-    spark = get_spark(cpus="8")
+    spark = get_spark()
     con = duck_con(sf_dir)
     mismatches = []
     for name, spec in sorted(api.REGISTRY.items()):

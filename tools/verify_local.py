@@ -239,7 +239,7 @@ def main() -> int:
     else:
         from etl_portfolio_project_spark.session import get_spark
 
-        spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+        spark = get_spark()
     con = duck_con(sf_dir)
     qs, oracles = api.queries(), api.oracle_sql()
     failed = []
@@ -249,8 +249,8 @@ def main() -> int:
         if only and name not in only:
             continue
         sdf = builder(spark, sf_dir).toPandas()
-        # same isolation as bench.py: a live claimed cache is a plan
-        # tree the CacheManager compares against every later query
+        # isolate queries as perfbench does: a live claimed cache is a
+        # plan tree the CacheManager compares against every later query
         caches.release_all()
         if name not in oracles:
             print(f"[rows-only] {name}: {len(sdf)} rows")
